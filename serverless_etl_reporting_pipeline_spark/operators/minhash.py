@@ -429,7 +429,8 @@ def neardup_components(
     component's canonical survivor.
 
     Two strategies, chosen by a measurement (the r12 bounded-probe
-    pattern — every driver fold is count-gated, never assumed small):
+    pattern — every driver fold is gated by a LIMIT-bounded probe of
+    the edge set, never assumed small):
 
     - **Bounded edge set** (≤ ``_CC_DRIVER_CAP`` pairs, probed with a
       LIMIT-bounded collect): union-find on the driver — O(E α(E))
@@ -468,49 +469,52 @@ def neardup_components(
     # (>cap) path's localCheckpoint below reads them back instead of
     # recomputing the candidate-join + exact-verify subtree from
     # scratch — the large-graph path no longer pays the most expensive
-    # joins twice. The bounded path unpersists immediately (its result
-    # is a local relation). A count-first gate (count() then collect())
+    # joins twice. The bounded path releases it after the fold (its
+    # result is a local relation). A count-first gate (count() then collect())
     # was prototyped in r14 and measured WORSE under the size-aware
     # spread — with ~10-partition stages the limit's incremental
     # scale-up is cheap, while count+collect adds a full extra pass
     # (t11 interleaved A/B: 177→198 tasks, +0.1-0.5 s wall) — so the
     # LIMIT probe stays; do not re-"fix" without beating those numbers.
     probe_src = pairs.select("id_a", "id_b").persist()
-    probe = probe_src.limit(_CC_DRIVER_CAP + 1).collect()
-    if len(probe) <= _CC_DRIVER_CAP:  # the limit returned the COMPLETE set
+    # finally: the cache is released on every exit, a raising probe
+    # collect or driver fold included — never leaked for the session
+    try:
+        probe = probe_src.limit(_CC_DRIVER_CAP + 1).collect()
+        if len(probe) <= _CC_DRIVER_CAP:  # the limit returned the COMPLETE set
+            if stats is not None:
+                stats["edges"] = len(probe)
+                stats["iters"] = 0
+            parent: dict = {}
+
+            def find(x):
+                r = x
+                while parent[r] != r:
+                    r = parent[r]
+                while parent[x] != r:  # path compression
+                    parent[x], x = r, parent[x]
+                return r
+
+            for row in probe:
+                a, b = row[0], row[1]
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)  # root = component min
+            rows = [(x, find(x)) for x in parent]
+            return pairs.sparkSession.createDataFrame(
+                rows, f"id {id_type}, lbl {id_type}"
+            )
+
+        # materialize the pair graph once — both union branches and every
+        # propagation round read it, and upstream is the whole MinHash
+        # pipeline (recomputing it per branch doubled t11's cost); the
+        # checkpoint reads the probe-cached partitions (see above) rather
+        # than recomputing the join subtree
+        pairs = probe_src.localCheckpoint()
+    finally:
         probe_src.unpersist()
-        if stats is not None:
-            stats["edges"] = len(probe)
-            stats["iters"] = 0
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in probe:
-            a, b = row[0], row[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)  # root = component min
-        rows = [(x, find(x)) for x in parent]
-        return pairs.sparkSession.createDataFrame(
-            rows, f"id {id_type}, lbl {id_type}"
-        )
-
-    # materialize the pair graph once — both union branches and every
-    # propagation round read it, and upstream is the whole MinHash
-    # pipeline (recomputing it per branch doubled t11's cost); the
-    # checkpoint reads the probe-cached partitions (see above) rather
-    # than recomputing the join subtree
-    pairs = probe_src.localCheckpoint()
-    probe_src.unpersist()
     if stats is not None:
         stats["edges"] = pairs.count()
         stats["iters"] = 0

@@ -10,20 +10,30 @@ The hot path is an Arrow-batched numpy kernel (`_stack_quantized` →
 matmul) — Spark's array higher-order functions are interpreted
 (~µs/element) and are used only on tiny frames (cell centroids).
 
-Scale paths:
-- brute-force top-k: one map kernel + TakeOrderedAndProject — linear
-  scan, embarrassingly parallel, the right baseline even at 100 TB when
-  k is small and queries are few;
-- `ivf_topk` / `ann_topk_rp` / `ann_topk_lsh`: bucket-pruned variants
-  for repeated queries — scan only the probed cells/buckets;
-- all-pairs ops (`top_similar_pairs`, `neardup_map`): unordered
-  block-pair grid join by default (no driver collect, arbitrary n);
-  broadcast build only as an opt-in small-N fast path.
+One exact-verify core, many candidate generators: every kernel scores
+through the same module-level numpy helpers — `_norms` (norms + the
+valid mask: zero-norm and non-finite rows never rank or pair),
+`_cos_block` (masked cosine matrix), `_block_pairs` (unordered
+id_a < id_b pairs of one block), `_centroid_scores` (quantized
+nearest-centroid scores) — plus two plan tails, `_scan_topk` (one
+query) and `_rank_per_query` (a query batch). The operators differ
+only in which rows reach the core:
+- `knn_bruteforce`: every row — a linear, embarrassingly parallel scan
+  feeding TakeOrderedAndProject, the right baseline even at 100 TB
+  when k is small and queries are few;
+- `ivf_topk` / `ann_topk_rp`: the probed cells / hamming-near buckets
+  only, for repeated queries; `sq8_rerank_topk`: an int8 candidate cut;
+- all-pairs ops (`top_similar_pairs`, `neardup_map`): the unordered
+  block-pair grid (`_grid_pairs` — no driver collect, arbitrary n);
+  `neardup_pairs_lsh_banded` / `semdedup_map`: band-code buckets /
+  nearest-centroid clusters, verified by the same pair extractor.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -98,47 +108,108 @@ def knn_bruteforce(
     `query_vec_quantized` must already be 1e-6-quantized (see
     `quantize_np`; Python round() is half-to-even and would drift).
     """
-    import numpy as np
-
     qq = np.asarray([float(x) for x in query_vec_quantized], dtype=np.float64)
-    qn = float(np.sqrt(qq @ qq))
-    if not (np.isfinite(qn) and qn > 0.0):
-        # zero-norm (or NULL/NaN-component: qn is NaN) query: no defined
-        # neighbors — short-circuit on the DRIVER (qn is known here)
-        # instead of paying a full corpus scan through the kernel just
-        # to yield nothing
-        return df.sparkSession.createDataFrame([], f"{id_col} long, cos double")
-    bc = df.sparkSession.sparkContext.broadcast((qq, qn))
+    return _scan_topk(_ids_vectors(df, id_col, vec_col, dim=len(qq)), qq, k, id_col)
+
+
+def _cos_out(col: str) -> Column:
+    """A raw exact cosine as the operators' output column: rounded to
+    the 1e-6 grid the oracles compare (`round(x*1e6)/1e6`)."""
+    return (F.round(F.col(col) * QUANT) / QUANT).alias("cos")
+
+
+def _norms(A):
+    """Row norms of a quantized matrix and its VALID mask — the one
+    place the degenerate-vector rule lives: a zero-norm row (cosine
+    undefined) and a non-finite row (NULL/NaN/Inf or, via
+    `quantize_np`, |x| > COMPONENT_BOUND components) never rank, pair
+    or take a centroid, so no NaN ever reaches a comparison."""
+    an = np.sqrt((A * A).sum(axis=1))
+    return an, np.isfinite(an) & (an > 0.0)
+
+
+def _cos_block(A, an, va, B, bn, vb):
+    """Cosine matrix of rows of A against rows of B: exact integer dots
+    divided by the norm products. Invalid rows divide by 1 — their
+    entries are garbage the callers mask with ``va``/``vb``."""
+    return (A @ B.T) / (np.where(va, an, 1.0)[:, None] * np.where(vb, bn, 1.0)[None, :])
+
+
+def _block_pairs(pdf, ids, tau: float | None = None):
+    """The unordered-pair extractor of one block of rows (a grid
+    diagonal group, a band bucket, a cluster): every pair with
+    id_a < id_b, both rows valid and, when ``tau`` is given,
+    cos >= tau. Returns (id_a, id_b, raw_cos) arrays."""
+    if len(ids) < 2:  # most band buckets are singletons: skip the stack
+        return ids[:0], ids[:0], np.empty(0)
+    A = _stack_quantized(pdf)
+    an, va = _norms(A)
+    S = _cos_block(A, an, va, A, an, va)
+    keep = (ids[:, None] < ids[None, :]) & va[:, None] & va[None, :]
+    if tau is not None:
+        keep &= S >= tau
+    ai, bi = np.nonzero(keep)
+    return ids[ai], ids[bi], S[ai, bi]
+
+
+def _centroid_scores(A, an, va, C, cn, vc):
+    """Nearest-centroid scores of rows of A against centroid rows C
+    (sorted by cell id), as 1e-6-quantized integers (round-half-away,
+    the `quantize_np` convention) so every rank compares the BIGINTs
+    the oracles rank. A zero-norm centroid scores -inf for everyone and
+    an invalid row scores -inf everywhere; argmax's first-max rule over
+    the cell-sorted columns breaks ties to the lowest cell."""
+    S = _cos_block(A, an, va, C, cn, vc)
+    S[:, ~vc] = -np.inf
+    S[~va, :] = -np.inf
+    return np.copysign(np.floor(np.abs(S * QUANT) + 0.5), S)
+
+
+def _scan_topk(frame: DataFrame, qq, k: int, id_col: str, row_mask=None) -> DataFrame:
+    """The single-query exact scan behind `knn_bruteforce`, `ivf_topk`
+    and `ann_topk_rp` — each only chooses the (_id, _qv) rows of
+    ``frame``. A zero-norm (or NULL/NaN-component) query has no defined
+    neighbors and short-circuits on the DRIVER, never paying a corpus
+    scan to yield nothing. Otherwise one Arrow kernel scores each valid
+    row (narrowed further by ``row_mask(A)`` when given) and only the
+    top ``k`` by (cos desc, id asc) survive TakeOrderedAndProject."""
+    qn, qv = _norms(qq[None, :])
+    if not qv[0]:
+        return frame.sparkSession.createDataFrame([], f"{id_col} long, cos double")
+    bc = frame.sparkSession.sparkContext.broadcast((qq, float(qn[0])))
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
         q, qnorm = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            if not valid.any():
-                continue
-            Av = A[valid]
-            cos = (Av @ q) / (an[valid] * qnorm)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[valid], "_raw": cos}
-            )
+            an, keep = _norms(A)
+            if row_mask is not None:
+                keep &= row_mask(A)
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf["_id"].to_numpy(dtype=np.int64)[keep],
+                        "_raw": (A[keep] @ q) / (an[keep] * qnorm),
+                    }
+                )
 
-    out = _ids_vectors(df, id_col, vec_col, dim=len(qq)).mapInPandas(
-        kernel,
-        schema=T.StructType(
-            [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-        ),
-    )
+    out = frame.mapInPandas(kernel, schema=f"{id_col} long, _raw double")
+    return out.orderBy(F.desc("_raw"), F.asc(id_col)).limit(k).select(id_col, _cos_out("_raw"))
+
+
+def _rank_per_query(out: DataFrame, k: int, qid_col: str, id_col: str) -> DataFrame:
+    """The query-batch tail of `batch_knn` and `ivf_batch_probe`: each
+    query's global top ``k`` by (cos desc, id asc) as a
+    WindowGroupLimit-pruned row_number over the kernel's (qid, id,
+    _raw) rows."""
+    w = Window.partitionBy(qid_col).orderBy(F.desc("_raw"), F.asc(id_col))
     return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
+        out.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(qid_col, id_col, F.col("rk").cast("int").alias("rk"), _cos_out("_raw"))
+        .orderBy(qid_col, "rk")
     )
 
 
@@ -154,8 +225,6 @@ def quantize_np(a):
     JVM-side quantize of a 2000×64 matrix alone cost more than the
     whole BLAS similarity kernel.
     """
-    import numpy as np
-
     try:
         v = np.asarray(a, dtype=np.float64)
     except (TypeError, ValueError):
@@ -234,8 +303,6 @@ def _stack_quantized(pdf, col: str = "_qv"):
     excludes NULL and ragged rows before any kernel); the re-raise
     below names the contract instead of numpy's opaque shape error if
     an operator ever feeds an unfiltered frame."""
-    import numpy as np
-
     try:
         return quantize_np(np.stack([np.asarray(v, dtype=np.float64) for v in pdf[col]]))
     except ValueError as e:
@@ -254,46 +321,18 @@ def _stack_quantized(pdf, col: str = "_qv"):
 
 
 def _collect_quantized_build(df: DataFrame, id_col: str, vec_col: str, dim: int | None = None):
-    """Collect + quantize a broadcast build side: (ids, matrix, norms).
+    """Collect + quantize a query batch: (ids, matrix, norms, valid).
     Raw floats cross the wire; quantization happens driver-side in numpy
-    (same `quantize_np` the kernels use). An EMPTY build side returns
-    (0-length ids, (0, 0) matrix, 0-length norms) — callers treat it as
-    "no queries/build rows" and emit nothing, instead of np.stack
-    crashing on an empty list. ``dim`` applies the `_ids_vectors`
-    ragged-row exclusion to the build side."""
-    import numpy as np
-
+    (same `quantize_np` the kernels use — a Row list's None components
+    map to NaN there, so such a row is invalid exactly like on the
+    Arrow side). An EMPTY side returns 0-length ids and a (0, 0) matrix
+    — callers treat it as "no queries" and emit nothing, instead of
+    np.stack crashing on an empty list. ``dim`` applies the
+    `_ids_vectors` ragged-row exclusion."""
     rows = _ids_vectors(df, id_col, vec_col, dim=dim).collect()
-    if not rows:
-        return np.empty(0, dtype=np.int64), np.zeros((0, 0)), np.empty(0)
     ids = np.array([r["_id"] for r in rows], dtype=np.int64)
-
-    def to_f64(v):
-        # Row lists can carry None components (the NULL-component
-        # corrupt class) — map to NaN like quantize_np's fallback, so
-        # the norm below is NaN and the callers' `qn > 0` guards
-        # exclude the row exactly like the Arrow-side kernels do
-        try:
-            return np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            return np.asarray(
-                [np.nan if x is None else float(x) for x in v], dtype=np.float64
-            )
-
-    B = quantize_np(np.stack([to_f64(r["_qv"]) for r in rows]))
-    return ids, B, np.sqrt((B * B).sum(axis=1))
-
-
-def quantized_dot(a: Column, b: Column) -> Column:
-    """Left-fold dot over quantized (integer-valued double) arrays —
-    exact, so identical to DuckDB's list_sum in any order."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def quantized_cosine(a: Column, b: Column) -> Column:
-    return quantized_dot(a, b) / (
-        F.sqrt(quantized_dot(a, a)) * F.sqrt(quantized_dot(b, b))
-    )
+    B = np.stack([quantize_np(r["_qv"]) for r in rows]) if rows else np.zeros((0, 0))
+    return (ids, B, *_norms(B))
 
 
 def ivf_topk(
@@ -338,18 +377,11 @@ def ivf_topk(
     filter below excludes them from both subtrees (oracle:
     len(embedding) = len(q) in the ex and e CTEs).
     """
-    import numpy as np
-
     qq_list = [float(x) for x in query_vec_quantized]
-    qq = np.asarray(qq_list, dtype=np.float64)
-    qn = float(np.sqrt(qq @ qq))
-    if not (np.isfinite(qn) and qn > 0.0):
-        # zero-norm (or NULL/NaN-component) query: no defined neighbors.
-        # Short-circuit BEFORE the probe ranking — its JVM cosine would
-        # raise DIVIDE_BY_ZERO under ANSI mode (the shingles-crash
-        # hazard class, r7 commit 61a3a72).
-        return df.sparkSession.createDataFrame([], f"{id_col} long, cos double")
-
+    # building the plan runs no job: a zero-norm query short-circuits in
+    # `_scan_topk` before the probe ranking's JVM cosine could ever run
+    # (it would raise DIVIDE_BY_ZERO under ANSI mode — the shingles-crash
+    # hazard class, r7 commit 61a3a72)
     df = df.filter((F.size(vec_col) == len(qq_list)) & ~_has_corrupt_component(vec_col))
     ex = df.select(cell_col, F.posexplode(as_double(vec_col)).alias("dim", "x")).select(
         cell_col, "dim", F.round(F.col("x") * QUANT).alias("q")
@@ -368,47 +400,16 @@ def ivf_topk(
     # Zero-norm centroids (undefined cosine) are never probe targets —
     # the ivf_batch_probe discipline, here as a pushed predicate.
     probed = (
-        centroids.filter(quantized_dot(F.col("cv"), F.col("cv")) > 0)
-        .select(cell_col, quantized_cosine(F.col("cv"), F.lit(qq_list)).alias("ccos"))
+        centroids.filter(dot(F.col("cv"), F.col("cv")) > 0)
+        .select(cell_col, cosine(F.col("cv"), F.lit(qq_list)).alias("ccos"))
         .orderBy(F.desc("ccos"), cell_col)
         .limit(nprobe)
         .select(cell_col)
     )
-
-    def cos_kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        if qn == 0.0:
-            return  # zero-norm query: no defined neighbors, empty result
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            if not valid.any():
-                continue
-            cos = (A[valid] @ qq) / (an[valid] * qn)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[valid], "_raw": cos}
-            )
-
-    out = (
-        df.join(F.broadcast(probed), cell_col, "left_semi")
-        .select(F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_qv"))
-        .mapInPandas(
-            cos_kernel,
-            schema=T.StructType(
-                [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-            ),
-        )
+    cand = df.join(F.broadcast(probed), cell_col, "left_semi").select(
+        F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_qv")
     )
-    return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    return _scan_topk(cand, np.asarray(qq_list, dtype=np.float64), k, id_col)
 
 
 _PAIRS_SCHEMA = T.StructType(
@@ -454,55 +455,29 @@ def _grid_pairs(
     tt = None if tau is None else float(tau)
 
     def kernel(key, pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        empty = _pd.DataFrame({"id_a": [], "id_b": [], "raw_cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "raw_cos": "float64"}
-        )
-        if not len(pdf):
-            return empty
         lo, hi = int(key[0]), int(key[1])
-        # zero-norm vectors have undefined cosine: they never pair (the
-        # semdedup_map valid-mask discipline) — no NaN reaches a compare
         if lo == hi:
-            A = _stack_quantized(pdf)
-            ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            S = (A @ A.T) / (
-                _np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :]
-            )
-            ai, bi = _np.nonzero(
-                (ids[:, None] < ids[None, :]) & valid[:, None] & valid[None, :]
-            )
-            ida, idb, cos = ids[ai], ids[bi], S[ai, bi]
+            ida, idb, cos = _block_pairs(pdf, pdf["_id"].to_numpy(dtype=np.int64), tt)
         else:
             pa = pdf[pdf["_blk"] == lo]
             pb = pdf[pdf["_blk"] == hi]
             if not len(pa) or not len(pb):
-                return empty
+                return pd.DataFrame()
             A, B = _stack_quantized(pa), _stack_quantized(pb)
-            aids = pa["_id"].to_numpy(dtype=_np.int64)
-            bids = pb["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            bn = _np.sqrt((B * B).sum(axis=1))
-            va, vb = (_np.isfinite(an) & (an > 0.0)), (_np.isfinite(bn) & (bn > 0.0))
-            S = (A @ B.T) / (
-                _np.where(va, an, 1.0)[:, None] * _np.where(vb, bn, 1.0)[None, :]
-            )
-            pair_ok = (va[:, None] & vb[None, :]).ravel()
-            xa = _np.repeat(aids, len(bids))[pair_ok]
-            xb = _np.tile(bids, len(aids))[pair_ok]
-            ida, idb = _np.minimum(xa, xb), _np.maximum(xa, xb)
-            cos = S.ravel()[pair_ok]
-        if tt is not None:
-            keep = cos >= tt
-            ida, idb, cos = ida[keep], idb[keep], cos[keep]
+            an, va = _norms(A)
+            bn, vb = _norms(B)
+            S = _cos_block(A, an, va, B, bn, vb)
+            keep = va[:, None] & vb[None, :]
+            if tt is not None:
+                keep &= S >= tt
+            ai, bi = np.nonzero(keep)
+            xa = pa["_id"].to_numpy(dtype=np.int64)[ai]
+            xb = pb["_id"].to_numpy(dtype=np.int64)[bi]
+            ida, idb, cos = np.minimum(xa, xb), np.maximum(xa, xb), S[ai, bi]
         if kk is not None and len(cos) > kk:
-            order = _np.lexsort((idb, ida, -cos))[:kk]
+            order = np.lexsort((idb, ida, -cos))[:kk]
             ida, idb, cos = ida[order], idb[order], cos[order]
-        return _pd.DataFrame({"id_a": ida, "id_b": idb, "raw_cos": cos})
+        return pd.DataFrame({"id_a": ida, "id_b": idb, "raw_cos": cos})
 
     return fan.groupBy("_lo", "_hi").applyInPandas(kernel, schema=_PAIRS_SCHEMA)
 
@@ -532,9 +507,8 @@ def top_similar_pairs(
     comparator (-cos, id_a, id_b), and the plan takes the global top-k
     of ≤ k·m(m+1)/2 rows. NO driver-side collect of vectors and no
     broadcast build: memory per task is two blocks, so n is unbounded.
-    (The broadcast variant `top_similar_pairs_broadcast` remains as a
-    small-N fast path; an even earlier all-pairs join with per-pair
-    array folds ran ~25× slower at sf0.1.)
+    (An earlier all-pairs join with per-pair array folds ran ~25×
+    slower at sf0.1.)
 
     Exact all-pairs is O(n²) work no matter the engine — at data sizes
     where that's unpayable, switch to the LSH/IVF candidate paths.
@@ -547,59 +521,6 @@ def top_similar_pairs(
     q = _ids_vectors(df, id_col, vec_col, dim=dim or _dim_of(df, vec_col))
     m = grid_blocks if grid_blocks is not None else _grid_size(df)
     top = _grid_pairs(q, m, k=int(k))
-    return top.orderBy(F.desc("raw_cos"), "id_a", "id_b").limit(k)
-
-
-def top_similar_pairs_broadcast(
-    df: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Broadcast-build variant of `top_similar_pairs`: collect + quantize
-    the full matrix driver-side (n·d·8 bytes — small-N interactive use
-    ONLY), stream the probe side through the same exact kernel. Produces
-    bit-identical results to the grid path (including the corrupt-row
-    contract: NULL and off-modal-dimension rows excluded)."""
-    spark = df.sparkSession
-    d = dim or _dim_of(df, vec_col)
-    q = _ids_vectors(df, id_col, vec_col, dim=d)
-    # build side only — the probe side never collects
-    bc = spark.sparkContext.broadcast(_collect_quantized_build(df, id_col, vec_col, dim=d))
-    kk = int(k)
-
-    def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        ids_b, Bm, bn = bc.value
-        # same valid-mask discipline as _grid_pairs: an Inf-component
-        # build row has bn = inf and would otherwise pair with NaN/inf
-        # scores that rank FIRST under the -cos lexsort
-        vb = _np.isfinite(bn) & (bn > 0.0)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            aid = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            va = _np.isfinite(an) & (an > 0.0)
-            # zero-norm vectors never pair (undefined cosine) — the
-            # _grid_pairs valid-mask discipline, bit-identical results
-            S = (A @ Bm.T) / (
-                _np.where(va, an, 1.0)[:, None] * _np.where(vb, bn, 1.0)[None, :]
-            )
-            ai, bi = _np.nonzero(
-                (aid[:, None] < ids_b[None, :]) & va[:, None] & vb[None, :]
-            )
-            cos = S[ai, bi]
-            order = _np.lexsort((ids_b[bi], aid[ai], -cos))[:kk]
-            yield _pd.DataFrame(
-                {"id_a": aid[ai][order], "id_b": ids_b[bi][order], "raw_cos": cos[order]}
-            )
-
-    top = q.mapInPandas(kernel, schema=_PAIRS_SCHEMA)
     return top.orderBy(F.desc("raw_cos"), "id_a", "id_b").limit(k)
 
 
@@ -635,9 +556,7 @@ def neardup_map(
     pairs = _grid_pairs(q, _grid_size(df), tau=float(threshold))
     kept = pairs.groupBy("id_b").agg(F.min(F.struct("id_a", "raw_cos")).alias("m"))
     return kept.select(
-        F.col("id_b").alias("dup_id"),
-        F.col("m.id_a").alias("kept_id"),
-        (F.round(F.col("m.raw_cos") * QUANT) / QUANT).alias("cos"),
+        F.col("id_b").alias("dup_id"), F.col("m.id_a").alias("kept_id"), _cos_out("m.raw_cos")
     ).orderBy("dup_id")
 
 
@@ -669,8 +588,6 @@ def neardup_pairs_lsh_banded(
     this operator is the high-similarity scale path, and more/narrower
     bands buy recall with candidate volume.
     """
-    import numpy as np
-
     if n_bits % bands:
         raise ValueError("n_bits must be divisible by bands")
     rpb = n_bits // bands
@@ -679,35 +596,14 @@ def neardup_pairs_lsh_banded(
     fan = _band_code_fan(df, P, bands, rpb, id_col, vec_col)
 
     def pair_kernel(key, pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        empty = _pd.DataFrame({"id_a": [], "id_b": [], "raw_cos": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "raw_cos": "float64"}
-        )
-        if len(pdf) < 2:
-            return empty
-        A = _stack_quantized(pdf)
-        ids = pdf[id_col].to_numpy(dtype=_np.int64)
-        an = _np.sqrt((A * A).sum(axis=1))
-        # zero-norm vectors never pair (undefined cosine) — the
-        # semdedup_map valid-mask discipline; no NaN reaches `>= tau`
-        valid = _np.isfinite(an) & (an > 0.0)
-        S = (A @ A.T) / (
-            _np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :]
-        )
-        ai, bi = _np.nonzero(
-            (ids[:, None] < ids[None, :]) & (S >= tau) & valid[:, None] & valid[None, :]
-        )
-        if not len(ai):
-            return empty
-        return _pd.DataFrame({"id_a": ids[ai], "id_b": ids[bi], "raw_cos": S[ai, bi]})
+        ida, idb, cos = _block_pairs(pdf, pdf[id_col].to_numpy(dtype=np.int64), tau)
+        return pd.DataFrame({"id_a": ida, "id_b": idb, "raw_cos": cos})
 
     pairs = fan.groupBy("_band", "_code").applyInPandas(pair_kernel, schema=_PAIRS_SCHEMA)
     return (
         pairs.groupBy("id_a", "id_b")
         .agg(F.first("raw_cos").alias("raw_cos"))  # same exact value from every band
-        .select("id_a", "id_b", (F.round(F.col("raw_cos") * QUANT) / QUANT).alias("cos"))
+        .select("id_a", "id_b", _cos_out("raw_cos"))
         .orderBy("id_a", "id_b")
     )
 
@@ -743,8 +639,6 @@ def random_hyperplanes(n_bits: int, dim: int, seed: int = 42) -> list[list[float
     integer arithmetic in both engines — which is what lets a
     random-projection LSH be oracle-checked at all.
     """
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     h = rng.standard_normal((n_bits, dim))
     return [[float(int(v)) for v in np.rint(row * QUANT)] for row in h]
@@ -781,53 +675,16 @@ def ann_topk_rp(
     NULL rows (`_ids_vectors` dim filter — a wrong-dimension vector can
     neither take a sign code against the planes nor a cosine against q).
     """
-    import numpy as np
-
-    spark = df.sparkSession
     P = np.array(random_hyperplanes(n_bits, len(query_vec_quantized), seed), dtype=np.float64)
     qq = np.asarray(query_vec_quantized, dtype=np.float64)
     q_bits = (P @ qq) >= 0  # exact: integer products < 2^53
-    qn = float(np.sqrt(qq @ qq))
-    if not (np.isfinite(qn) and qn > 0.0):
-        # zero-norm (or NULL/NaN-component) query: driver-side
-        # short-circuit (no corpus scan)
-        return spark.createDataFrame([], f"{id_col} long, cos double")
-    bc = spark.sparkContext.broadcast((P, qq, q_bits, qn, int(probe_hamming)))
+    r = int(probe_hamming)
 
-    def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
+    def in_probed_buckets(A):
+        return (((A @ P.T) >= 0) != q_bits[None, :]).sum(axis=1) <= r
 
-        Pm, q, qb, qnorm, r = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = _stack_quantized(pdf)
-            codes = (A @ Pm.T) >= 0
-            mask = (codes != qb[None, :]).sum(axis=1) <= r
-            n2 = (A * A).sum(axis=1)
-            # zero-norm (cosine undefined) and non-finite (corrupt
-            # components) rows are excluded
-            mask &= _np.isfinite(n2) & (n2 > 0.0)
-            if not mask.any():
-                continue
-            Am = A[mask]
-            cos = (Am @ q) / (_np.sqrt((Am * Am).sum(axis=1)) * qnorm)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[mask], "_raw": cos}
-            )
-
-    out = _ids_vectors(df, id_col, vec_col, dim=len(qq)).mapInPandas(
-        kernel,
-        schema=T.StructType(
-            [T.StructField(id_col, T.LongType()), T.StructField("_raw", T.DoubleType())]
-        ),
-    )
-    return (
-        out.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    frame = _ids_vectors(df, id_col, vec_col, dim=len(qq))
+    return _scan_topk(frame, qq, k, id_col, row_mask=in_probed_buckets)
 
 
 def ann_topk_e2lsh(
@@ -842,10 +699,9 @@ def ann_topk_e2lsh(
     seed: int = 777,
 ) -> DataFrame:
     """Approximate euclidean top-k via classic E2LSH bucket tables —
-    the oracle-CHECKABLE replacement for the pyspark.ml
-    BucketedRandomProjectionLSH path (`ann_topk_lsh` below), same
-    hash-family idea (Datar et al. p-stable LSH) but deterministic and
-    exact in both engines:
+    the oracle-CHECKABLE replacement for pyspark.ml's
+    BucketedRandomProjectionLSH, same hash-family idea (Datar et al.
+    p-stable LSH) but deterministic and exact in both engines:
 
     - `n_tables` tables of `rows_per_table` seeded quantized projections
       (`random_hyperplanes` — integer-valued, inlined as literals into
@@ -865,8 +721,6 @@ def ann_topk_e2lsh(
     computes codes + distances, and only ≤k survivors per partition feed
     TakeOrderedAndProject.
     """
-    import numpy as np
-
     dim = len(query_vec_quantized)
     P = np.array(
         random_hyperplanes(n_tables * rows_per_table, dim, seed), dtype=np.float64
@@ -879,16 +733,13 @@ def ann_topk_e2lsh(
     )
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
         Pm, q, qb, w, L, g = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            B = _np.floor((A @ Pm.T) / w)
-            match = _np.zeros(len(A), dtype=bool)
+            B = np.floor((A @ Pm.T) / w)
+            match = np.zeros(len(A), dtype=bool)
             for t in range(L):
                 sl = slice(t * g, (t + 1) * g)
                 match |= (B[:, sl] == qb[sl][None, :]).all(axis=1)
@@ -896,8 +747,8 @@ def ann_topk_e2lsh(
                 continue
             Am = A[match]
             s2 = ((Am - q) ** 2).sum(axis=1)
-            yield _pd.DataFrame(
-                {id_col: pdf["_id"].to_numpy(dtype=_np.int64)[match], "_s2": s2}
+            yield pd.DataFrame(
+                {id_col: pdf["_id"].to_numpy(dtype=np.int64)[match], "_s2": s2}
             )
 
     out = _ids_vectors(df, id_col, vec_col, dim=dim).mapInPandas(
@@ -910,40 +761,6 @@ def ann_topk_e2lsh(
         out.orderBy(F.asc("_s2"), F.asc(id_col))
         .limit(k)
         .select(id_col, (F.round(F.sqrt("_s2")) / QUANT).alias("dist"))
-    )
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k via random-projection LSH buckets.
-
-    At 100 TB the model's hash tables prune the candidate set to the
-    query's buckets; deterministic with the fixed seed. Distance is
-    euclidean (the LSH family's metric); for cosine semantics normalize
-    vectors upstream.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import Vectors
-
-    feats = df.select(id_col, array_to_vector(as_double(vec_col)).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(feats)
-    return model.approxNearestNeighbors(feats, Vectors.dense(query_vec), k, distCol="dist").select(
-        id_col, "dist"
     )
 
 
@@ -972,14 +789,15 @@ def sq8_rerank_topk(
     Plan: scan → Arrow int8-score kernel (per-batch candidate prune) →
     TakeOrderedAndProject(n_candidates) → TakeOrderedAndProject(k).
 
-    Degenerate inputs (the `ivf_batch_probe` discipline): zero-norm
-    corpus vectors are excluded BEFORE the int8 candidate cut (their
-    rerank cosine is undefined — dropping them later would let them
-    crowd real candidates out of the n_candidates window); a zero-norm
-    query returns an empty frame. Mirrored in the v10 oracle's
-    `nrm > 0` predicate.
+    Degenerate inputs (the `_norms` valid mask): zero-norm and corrupt
+    corpus vectors — NULL/NaN/Inf components, and |x| > COMPONENT_BOUND
+    ones, which `quantize_np` maps to NaN — are excluded BEFORE the int8
+    candidate cut (their rerank cosine is undefined — dropping them
+    later would let them crowd real candidates out of the n_candidates
+    window, and a saturated int8 code would score a 1e30 row like a
+    real one); a zero-norm query returns an empty frame. Mirrored in
+    the v10 oracle's `nrm > 0` and abs(x) > 1e12 predicates.
     """
-    import numpy as np
 
     def q8(m):
         # round-half-away (matches Spark ROUND / DuckDB round), then
@@ -990,55 +808,44 @@ def sq8_rerank_topk(
         [np.nan if x is None else float(x) for x in query_vec], dtype=np.float64
     )
     qq = quantize_np(qv)
-    qn = float(np.sqrt(qq @ qq))
-    if not (np.isfinite(qn) and qn > 0.0):
+    qn, qok = _norms(qq[None, :])
+    if not qok[0]:
         # zero-norm (or NULL/NaN-component) query: driver-side
         # short-circuit (no corpus scan)
         return df.sparkSession.createDataFrame(
             [], f"{id_col} long, score_i8 long, cos double"
         )
-    bc = df.sparkSession.sparkContext.broadcast((q8(qv), qq, qn))
+    bc = df.sparkSession.sparkContext.broadcast((q8(qv), qq, float(qn[0])))
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
         q8v, qqv, qnorm = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = _np.stack([_np.asarray(v, dtype=_np.float64) for v in pdf["_qv"]])
-            ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            # zero-norm rows are excluded BEFORE the candidate cut —
-            # undefined rerank cosine must not crowd out real candidates.
-            # isfinite: a NULL component reaches the kernel as NaN and
-            # would otherwise take a garbage int8 score (NaN.any() is
-            # True); non-finite rows are corrupt and never candidates
-            valid = _np.isfinite(M).all(axis=1) & quantize_np(M).any(axis=1)
+            M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_qv"]])
+            Mq = quantize_np(M)
+            # invalid rows leave BEFORE the candidate cut — an undefined
+            # rerank cosine must not crowd out real candidates
+            an, valid = _norms(Mq)
             if not valid.any():
                 continue
-            M, ids = M[valid], ids[valid]
+            M, Mq, an = M[valid], Mq[valid], an[valid]
+            ids = pdf["_id"].to_numpy(dtype=np.int64)[valid]
             s8 = q8(M) @ q8v
             # per-batch candidate prune: the union of per-batch top-N by
             # (s8 desc, id asc) always contains the global top-N
-            order = _np.lexsort((ids, -s8))[:n_candidates]
-            Mq = quantize_np(M[order])
-            cos = (Mq @ qqv) / (_np.sqrt((Mq * Mq).sum(axis=1)) * qnorm)
-            yield _pd.DataFrame(
+            order = np.lexsort((ids, -s8))[:n_candidates]
+            yield pd.DataFrame(
                 {
                     id_col: ids[order],
-                    "score_i8": s8[order].astype(_np.int64),
-                    "_raw": cos,
+                    "score_i8": s8[order].astype(np.int64),
+                    "_raw": (Mq[order] @ qqv) / (an[order] * qnorm),
                 }
             )
 
     out = _ids_vectors(df, id_col, vec_col, dim=len(qq)).mapInPandas(kernel, schema=f"{id_col} long, score_i8 long, _raw double")
     cand = out.orderBy(F.desc("score_i8"), F.asc(id_col)).limit(n_candidates)
-    return (
-        cand.orderBy(F.desc("_raw"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score_i8", (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"))
-    )
+    return cand.orderBy(F.desc("_raw"), F.asc(id_col)).limit(k).select(id_col, "score_i8", _cos_out("_raw"))
 
 
 def semdedup_map(
@@ -1082,8 +889,6 @@ def semdedup_map(
     excluded from the dedup entirely: they can neither shift a seed
     centroid nor take an assignment.
     """
-    import numpy as np
-
     tau = float(threshold)
     df = df.filter(
         (F.size(vec_col) == _dim_of(df, vec_col)) & ~_has_corrupt_component(vec_col)
@@ -1114,38 +919,21 @@ def semdedup_map(
     C = np.zeros((len(labels), dim), dtype=np.float64)
     for r in cent_rows:
         C[lab_pos[r["_lab"]], r["dim"]] = float(r["c"])
-    cn = np.sqrt((C * C).sum(axis=1))
-    labs = np.asarray(labels, dtype=np.int64)
-    bc = df.sparkSession.sparkContext.broadcast((labs, C, cn))
+    bc = df.sparkSession.sparkContext.broadcast((np.asarray(labels, dtype=np.int64), C, *_norms(C)))
 
     def assign_kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        L, Cm, Cn = bc.value
+        L, Cm, cn, cv = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            # zero-norm guards (cosine undefined): a zero-norm VECTOR is
-            # assigned deterministically to the lowest label; a zero-norm
-            # CENTROID is never anyone's nearest. No NaN reaches argmax.
-            zv, zc = an == 0.0, Cn == 0.0
-            S = (A @ Cm.T) / (
-                _np.where(zv, 1.0, an)[:, None] * _np.where(zc, 1.0, Cn)[None, :]
-            )
-            S[:, zc] = -_np.inf
-            S[zv, :] = -_np.inf
-            # 1e-6 quantized scores (round-half-away, see quantize_np) so
-            # the argmax compares the same BIGINTs the oracle ranks;
-            # argmax takes the FIRST max → ties break to the lowest label
-            Sq = _np.copysign(_np.floor(_np.abs(S * QUANT) + 0.5), S)
-            best = Sq.argmax(axis=1)
-            yield _pd.DataFrame(
+            # a zero-norm VECTOR scores -inf everywhere and so lands on
+            # the lowest label; a zero-norm CENTROID is nobody's nearest
+            Sq = _centroid_scores(A, *_norms(A), Cm, cn, cv)
+            yield pd.DataFrame(
                 {
-                    id_col: pdf["_id"].to_numpy(dtype=_np.int64),
-                    "cluster": L[best],
+                    id_col: pdf["_id"].to_numpy(dtype=np.int64),
+                    "cluster": L[Sq.argmax(axis=1)],
                     "_qv": pdf["_qv"],
                 }
             )
@@ -1171,39 +959,15 @@ def semdedup_map(
     )
 
     def pair_kernel(key, pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        empty = _pd.DataFrame(
-            {"id_a": [], "id_b": [], "cluster": [], "raw_cos": []}
-        ).astype({"id_a": "int64", "id_b": "int64", "cluster": "int64", "raw_cos": "float64"})
-        if len(pdf) < 2:
-            return empty
-        A = _stack_quantized(pdf)
-        ids = pdf[id_col].to_numpy(dtype=_np.int64)
-        an = _np.sqrt((A * A).sum(axis=1))
-        # zero-norm vectors have undefined cosine: they never pair (the
-        # valid mask), deterministically — no NaN reaches the comparison
-        valid = _np.isfinite(an) & (an > 0.0)
-        S = (A @ A.T) / (_np.where(valid, an, 1.0)[:, None] * _np.where(valid, an, 1.0)[None, :])
-        ai, bi = _np.nonzero(
-            (ids[:, None] < ids[None, :]) & (S >= tau) & valid[:, None] & valid[None, :]
-        )
-        if not len(ai):
-            return empty
-        return _pd.DataFrame(
-            {"id_a": ids[ai], "id_b": ids[bi], "cluster": int(key[0]), "raw_cos": S[ai, bi]}
-        )
+        ida, idb, cos = _block_pairs(pdf, pdf[id_col].to_numpy(dtype=np.int64), tau)
+        return pd.DataFrame({"id_a": ida, "id_b": idb, "cluster": int(key[0]), "raw_cos": cos})
 
     pairs = assigned.groupBy("cluster").applyInPandas(pair_kernel, schema=pair_schema)
     kept = pairs.groupBy("id_b").agg(
         F.min(F.struct("id_a", "raw_cos")).alias("m"), F.min("cluster").alias("cluster")
     )
     return kept.select(
-        F.col("id_b").alias("dup_id"),
-        F.col("m.id_a").alias("kept_id"),
-        "cluster",
-        (F.round(F.col("m.raw_cos") * QUANT) / QUANT).alias("cos"),
+        F.col("id_b").alias("dup_id"), F.col("m.id_a").alias("kept_id"), "cluster", _cos_out("m.raw_cos")
     ).orderBy("dup_id")
 
 
@@ -1219,24 +983,21 @@ def _band_code_fan(
     bc = df.sparkSession.sparkContext.broadcast((P, int(bands), int(rpb)))
 
     def code_kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
         Pm, L, g = bc.value
-        w = (2 ** _np.arange(g)).astype(_np.int64)
+        w = (2 ** np.arange(g)).astype(np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            bits = ((A @ Pm.T) >= 0).astype(_np.int64)
-            ids = pdf["_id"].to_numpy(dtype=_np.int64)
+            bits = ((A @ Pm.T) >= 0).astype(np.int64)
+            ids = pdf["_id"].to_numpy(dtype=np.int64)
             out = []
             for b in range(L):
                 code = bits[:, b * g : (b + 1) * g] @ w
                 out.append(
-                    _pd.DataFrame({"_band": b, "_code": code, id_col: ids, "_qv": pdf["_qv"]})
+                    pd.DataFrame({"_band": b, "_code": code, id_col: ids, "_qv": pdf["_qv"]})
                 )
-            yield _pd.concat(out, ignore_index=True)
+            yield pd.concat(out, ignore_index=True)
 
     fan_schema = T.StructType(
         [
@@ -1283,8 +1044,6 @@ def neardup_vector_index_probe(
     on it); when absent it is inferred as the corpus's modal length
     (`_dim_of` — one tiny driver aggregate, the oracles' modal-len CTE).
     """
-    import numpy as np
-
     if n_bits % bands:
         raise ValueError("n_bits must be divisible by bands")
     rpb = n_bits // bands
@@ -1357,33 +1116,20 @@ def probe_band_index(
     )
 
     def probe_kernel(key, pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        empty = _pd.DataFrame({"snap_id": [], "corp_id": [], "raw_cos": []}).astype(
-            {"snap_id": "int64", "corp_id": "int64", "raw_cos": "float64"}
-        )
         corp = pdf[pdf["_side"] == 0]
         snap = pdf[pdf["_side"] == 1]
         if not len(corp) or not len(snap):
-            return empty
+            return pd.DataFrame()
         A = _stack_quantized(corp)  # corpus bucket
         B = _stack_quantized(snap)  # snapshot bucket
-        an = _np.sqrt((A * A).sum(axis=1))
-        bn = _np.sqrt((B * B).sum(axis=1))
-        # zero-norm vectors never pair (undefined cosine) — the
-        # semdedup_map valid-mask discipline; no NaN reaches `>= tau`
-        va, vb = (_np.isfinite(an) & (an > 0.0)), (_np.isfinite(bn) & (bn > 0.0))
-        S = (B @ A.T) / (
-            _np.where(vb, bn, 1.0)[:, None] * _np.where(va, an, 1.0)[None, :]
-        )
-        bi, ai = _np.nonzero((S >= tau) & vb[:, None] & va[None, :])
-        if not len(bi):
-            return empty
-        return _pd.DataFrame(
+        an, va = _norms(A)
+        bn, vb = _norms(B)
+        S = _cos_block(B, bn, vb, A, an, va)
+        bi, ai = np.nonzero((S >= tau) & vb[:, None] & va[None, :])
+        return pd.DataFrame(
             {
-                "snap_id": snap[id_col].to_numpy(dtype=_np.int64)[bi],
-                "corp_id": corp[id_col].to_numpy(dtype=_np.int64)[ai],
+                "snap_id": snap[id_col].to_numpy(dtype=np.int64)[bi],
+                "corp_id": corp[id_col].to_numpy(dtype=np.int64)[ai],
                 "raw_cos": S[bi, ai],
             }
         )
@@ -1397,7 +1143,7 @@ def probe_band_index(
             id_col,
             F.col("m").isNotNull().alias("is_dup"),
             F.col("m.corp_id").alias("dup_src"),
-            (F.round(F.col("m.raw_cos") * QUANT) / QUANT).alias("cos"),
+            _cos_out("m.raw_cos"),
         )
         .orderBy(id_col)
     )
@@ -1436,89 +1182,56 @@ def batch_knn(
     ragged query emits no neighbor rows (absent qid, like zero-norm).
     Mirrored by the oracle's modal-len CTE.
     """
-    import numpy as np
-
     d = dim or _dim_of(corpus, vec_col)
-    qids, Q, qn = _collect_quantized_build(queries, qid_col, vec_col, dim=d)
-    if len(qids) == 0 or not (np.isfinite(qn) & (qn > 0.0)).any():
+    qids, Q, qn, qv = _collect_quantized_build(queries, qid_col, vec_col, dim=d)
+    if not qv.any():
         # empty batch, or every query zero-norm: no ranking exists —
         # driver-side short-circuit, never a corpus scan for nothing
         return corpus.sparkSession.createDataFrame(
             [], f"{qid_col} long, {id_col} long, rk int, cos double"
         )
-    bc = corpus.sparkSession.sparkContext.broadcast((qids, Q, qn, int(k)))
+    bc = corpus.sparkSession.sparkContext.broadcast((qids, Q, qn, qv, int(k)))
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        qi, Qm, qnorm, kk = bc.value
-        qvalid = _np.isfinite(qnorm) & (qnorm > 0.0)
+        qi, Qm, qnorm, qvalid, kk = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            cvalid = _np.isfinite(an) & (an > 0.0)
+            an, cvalid = _norms(A)
             if not cvalid.any():
                 continue
-            A, ids, an = A[cvalid], ids[cvalid], an[cvalid]
-            S = (A @ Qm.T) / (an[:, None] * _np.where(qvalid, qnorm, 1.0)[None, :])
-            out_q, out_id, out_cos = [], [], []
-            for j in range(S.shape[1]):
-                if not qvalid[j]:
-                    continue  # zero-norm query: no defined neighbors
-                order = _np.lexsort((ids, -S[:, j]))[:kk]
-                out_q.append(_np.full(len(order), qi[j], dtype=_np.int64))
-                out_id.append(ids[order])
-                out_cos.append(S[order, j])
-            yield _pd.DataFrame(
+            A, an = A[cvalid], an[cvalid]
+            ids = pdf["_id"].to_numpy(dtype=np.int64)[cvalid]
+            S = _cos_block(A, an, cvalid[cvalid], Qm, qnorm, qvalid)
+            # zero-norm queries have no defined neighbors: skipped
+            orders = [(j, np.lexsort((ids, -S[:, j]))[:kk]) for j in np.flatnonzero(qvalid)]
+            yield pd.DataFrame(
                 {
-                    qid_col: _np.concatenate(out_q),
-                    id_col: _np.concatenate(out_id),
-                    "_raw": _np.concatenate(out_cos),
+                    qid_col: np.concatenate([np.full(len(o), qi[j], dtype=np.int64) for j, o in orders]),
+                    id_col: np.concatenate([ids[o] for _, o in orders]),
+                    "_raw": np.concatenate([S[o, j] for j, o in orders]),
                 }
             )
 
-    from pyspark.sql import Window
-
     out = _ids_vectors(corpus, id_col, vec_col, dim=d).mapInPandas(kernel, schema=f"{qid_col} long, {id_col} long, _raw double")
-    return (
-        out.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy(qid_col).orderBy(F.desc("_raw"), F.asc(id_col))
-            ),
-        )
-        .filter(F.col("rk") <= k)
-        .select(
-            qid_col, id_col, F.col("rk").cast("int").alias("rk"),
-            (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"),
-        )
-        .orderBy(qid_col, "rk")
-    )
+    return _rank_per_query(out, k, qid_col, id_col)
 
 
 def _collect_centroid_matrix(centroids: DataFrame):
     """Collect a centroid table (cells × dims: aggregate-sized) into
-    ``(cells, C, cn)`` with columns SORTED BY CELL ID ascending — the
-    shared prologue of `assign_cells` and `ivf_batch_probe`, so the
-    zero-norm-centroid guard logic has exactly one implementation. The
+    ``(cells, C, cn, valid)`` with rows SORTED BY CELL ID ascending —
+    the shared prologue of `assign_cells` and `ivf_batch_probe`, whose
+    `_centroid_scores` ties-to-lowest-cell rule relies on that order. The
     `cv` arrays are already exact 1e-6 integers (`ivf_centroids`); no
     re-quantization happens here. An EMPTY centroid table (a quantizer
     built from an empty corpus) returns 0-length cells and a (0, 0)
     matrix — probes then probe nothing and assigns quarantine everything
     to -1, instead of numpy crashing on a dimensionless array."""
-    import numpy as np
-
-    rows = centroids.collect()
-    if not rows:
-        return np.empty(0, dtype=np.int64), np.zeros((0, 0)), np.empty(0)
-    order = np.argsort(np.asarray([r[0] for r in rows], dtype=np.int64), kind="stable")
-    cells = np.asarray([rows[i][0] for i in order], dtype=np.int64)
-    C = np.asarray([[float(x) for x in rows[i][1]] for i in order], dtype=np.float64)
-    return cells, C, np.sqrt((C * C).sum(axis=1))
+    rows = sorted(centroids.collect(), key=lambda r: r[0])
+    cells = np.array([r[0] for r in rows], dtype=np.int64)
+    C = np.array([[float(x) for x in r[1]] for r in rows]) if rows else np.zeros((0, 0))
+    return (cells, C, *_norms(C))
 
 
 def ivf_centroids(
@@ -1631,13 +1344,11 @@ def ivf_batch_probe(
     scores candidates against their probing query; WindowGroupLimit
     prunes the per-query rank. Work ∝ candidates, shuffle ≤ candidates.
     """
-    import numpy as np
-
-    cells, C, cn = _collect_centroid_matrix(centroids)
+    cells, C, cn, cv = _collect_centroid_matrix(centroids)
     # queries off the INDEX dimension (free to know: the collected
     # centroid matrix carries it) are corrupt for this index — excluded
     # like NULL queries, their qids absent from the result
-    qids, Q, qn = _collect_quantized_build(
+    qids, Q, qn, qv = _collect_quantized_build(
         queries, qid_col, vec_col, dim=C.shape[1] if len(cells) else None
     )
     if len(qids) == 0 or len(cells) == 0:
@@ -1645,19 +1356,11 @@ def ivf_batch_probe(
         # probed — deterministic empty result, no degenerate matmul
         pairs = []
     else:
-        # zero-norm guards (cosine undefined; the semdedup_map
-        # discipline): a zero-norm CENTROID is never anyone's probe
-        # target; a zero-norm QUERY probes the lowest cells
-        # deterministically and its candidate rows are then dropped by
-        # the kernel's valid mask — no NaN anywhere
-        zq, zc = ~(np.isfinite(qn) & (qn > 0.0)), ~(np.isfinite(cn) & (cn > 0.0))
-        S = (Q @ C.T) / (np.where(zq, 1.0, qn)[:, None] * np.where(zc, 1.0, cn)[None, :])
-        S[:, zc] = -np.inf
-        S[zq, :] = -np.inf
-        # 1e-6-quantized scores (round-half-away, quantize_np convention)
-        # so the rank compares the same BIGINTs the oracle ranks; lexsort
-        # ties break to the lowest cell id
-        Sq = np.copysign(np.floor(np.abs(S * QUANT) + 0.5), S)
+        # a zero-norm CENTROID is never anyone's probe target; a
+        # zero-norm QUERY probes the lowest cells deterministically and
+        # its candidate rows are then dropped by the kernel — no NaN
+        # anywhere; lexsort ties break to the lowest cell id
+        Sq = _centroid_scores(Q, qn, qv, C, cn, cv)
         pairs = [
             (int(i), int(qids[i]), int(cells[j]))
             for i in range(len(qids))
@@ -1670,57 +1373,35 @@ def ivf_batch_probe(
     # in a collect-order-dependent way. Per-row probing + the final
     # per-qid rank = deterministic union semantics, the batch_knn shape.
     probe_df = spark.createDataFrame(pairs, f"_qrow int, {qid_col} long, _cell long")
-    bc = spark.sparkContext.broadcast((Q, qn))
+    bc = spark.sparkContext.broadcast((Q, qn, qv))
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        Qm, qnorm = bc.value
+        Qm, qnorm, qvalid = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             A = _stack_quantized(pdf)
-            ids = pdf["_id"].to_numpy(dtype=_np.int64)
-            an = _np.sqrt((A * A).sum(axis=1))
-            cols = pdf["_qrow"].to_numpy(dtype=_np.int64)
-            raw = _np.zeros(len(ids), dtype=_np.float64)
-            # zero-norm posting/query vectors have undefined cosine: they
-            # are EXCLUDED from results deterministically, never NaN-ranked
-            valid = _np.isfinite(an) & (an > 0.0)
-            an_safe = _np.where(valid, an, 1.0)
-            for j in set(cols.tolist()):  # candidate-linear, one BLAS row-block per query
-                m = cols == j
-                if not (_np.isfinite(qnorm[j]) and qnorm[j] > 0.0):
-                    valid[m] = False
-                    continue
+            an, valid = _norms(A)
+            rows = pdf["_qrow"].to_numpy(dtype=np.int64)
+            # a candidate of a zero-norm query is excluded like a
+            # zero-norm posting — undefined cosine, never NaN-ranked
+            valid &= qvalid[rows]
+            raw = np.zeros(len(A), dtype=np.float64)
+            an_safe = np.where(valid, an, 1.0)
+            for j in set(rows[valid].tolist()):  # candidate-linear, one BLAS row-block per query
+                m = rows == j
                 raw[m] = (A[m] @ Qm[j]) / (an_safe[m] * qnorm[j])
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    qid_col: pdf[qid_col].to_numpy(dtype=_np.int64)[valid],
-                    id_col: ids[valid],
+                    qid_col: pdf[qid_col].to_numpy(dtype=np.int64)[valid],
+                    id_col: pdf["_id"].to_numpy(dtype=np.int64)[valid],
                     "_raw": raw[valid],
                 }
             )
 
-    from pyspark.sql import Window
-
     cand = postings.join(F.broadcast(probe_df), "_cell").select("_qrow", qid_col, "_id", "_qv")
     out = cand.mapInPandas(kernel, schema=f"{qid_col} long, {id_col} long, _raw double")
-    return (
-        out.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy(qid_col).orderBy(F.desc("_raw"), F.asc(id_col))
-            ),
-        )
-        .filter(F.col("rk") <= k)
-        .select(
-            qid_col, id_col, F.col("rk").cast("int").alias("rk"),
-            (F.round(F.col("_raw") * QUANT) / QUANT).alias("cos"),
-        )
-        .orderBy(qid_col, "rk")
-    )
+    return _rank_per_query(out, k, qid_col, id_col)
 
 
 def assign_cells(
@@ -1750,63 +1431,35 @@ def assign_cells(
     `_cell = -1`: deterministic, never NaN, and invisible to probes
     (probe pairs reference real cells only).
     """
-    cells, C, cn = _collect_centroid_matrix(centroids)
-    return _assign_cells_precollected(cells, C, cn, arrivals, id_col, vec_col)
+    return _assign_cells_precollected(*_collect_centroid_matrix(centroids), arrivals, id_col, vec_col)
 
 
 def _assign_cells_precollected(
-    cells, C, cn, arrivals: DataFrame, id_col: str, vec_col: str
+    cells, C, cn, cv, arrivals: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """`assign_cells` body over an ALREADY-COLLECTED quantizer —
     split out so `lloyd_refresh` can reuse the one centroid collect for
     both the assignment and the refreshed-centroid dimension instead of
     paying a second inference pass over the assigned frame."""
-    import numpy as np
-
-    spark = arrivals.sparkSession
-    bc = spark.sparkContext.broadcast((cells, C, cn, cn == 0.0))
+    bc = arrivals.sparkSession.sparkContext.broadcast((cells, C, cn, cv))
 
     def kernel(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        cl, Cm, cnorm, zcell = bc.value
-        cn_safe = _np.where(zcell, 1.0, cnorm)
-        if len(cl) == 0:
-            # a quantizer with zero cells (built from an empty corpus):
-            # nothing is assignable — quarantine every arrival, the same
-            # -1 contract as the all-zero-norm quantizer
-            for pdf in batches:
-                if len(pdf):
-                    yield _pd.DataFrame(
-                        {
-                            "_cell": _np.full(len(pdf), -1, dtype=_np.int64),
-                            "_id": pdf["_id"].to_numpy(dtype=_np.int64),
-                            "_qv": pdf["_qv"],
-                        }
-                    )
-            return
+        cl, Cm, cn, cv = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = _stack_quantized(pdf)
-            an = _np.sqrt((A * A).sum(axis=1))
-            valid = _np.isfinite(an) & (an > 0.0)
-            S = (A @ Cm.T) / (_np.where(valid, an, 1.0)[:, None] * cn_safe[None, :])
-            S[:, zcell] = -_np.inf
-            # quantized-integer compare, columns pre-sorted by cell id so
-            # argmax's first-max rule IS the ties→lowest-cell rule
-            Sq = _np.copysign(_np.floor(_np.abs(S * QUANT) + 0.5), S)
-            best = cl[_np.argmax(Sq, axis=1)]
-            # a row with no finite score has no assignable cell (every
-            # centroid zero-norm) — quarantine, don't argmax into -inf
-            assignable = valid & _np.isfinite(_np.max(Sq, axis=1))
-            yield _pd.DataFrame(
-                {
-                    "_cell": _np.where(assignable, best, _np.int64(-1)),
-                    "_id": pdf["_id"].to_numpy(dtype=_np.int64),
-                    "_qv": pdf["_qv"],
-                }
+            # quarantine by default: a quantizer with zero cells (built
+            # from an empty corpus) assigns nothing, and a row with no
+            # finite score — zero-norm, or every centroid zero-norm —
+            # has no assignable cell; never argmax into -inf
+            cell = np.full(len(pdf), -1, dtype=np.int64)
+            if len(cl):
+                A = _stack_quantized(pdf)
+                Sq = _centroid_scores(A, *_norms(A), Cm, cn, cv)
+                ok = np.isfinite(Sq.max(axis=1))
+                cell[ok] = cl[Sq.argmax(axis=1)[ok]]
+            yield pd.DataFrame(
+                {"_cell": cell, "_id": pdf["_id"].to_numpy(dtype=np.int64), "_qv": pdf["_qv"]}
             )
 
     # NULL and RAGGED vectors are EXCLUDED (not quarantined): the -1
@@ -1851,8 +1504,8 @@ def lloyd_refresh(
     one explode feeding a partial+final (cell, dim) aggregate — shuffle
     ≤ cells × dims per map partition, never the corpus.
     """
-    cells, C, cn = _collect_centroid_matrix(centroids)
-    assigned = _assign_cells_precollected(cells, C, cn, corpus, id_col, vec_col).filter(
+    cells, C, cn, cv = _collect_centroid_matrix(centroids)
+    assigned = _assign_cells_precollected(cells, C, cn, cv, corpus, id_col, vec_col).filter(
         F.col("_cell") >= 0
     )
     # the assigned frame is dimension-conformed by construction (the

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serverless_etl_reporting_pipeline_spark.operators.vectors import (
-    ann_topk_lsh,
     as_double,
     ivf_topk,
     knn_bruteforce,
@@ -312,8 +311,7 @@ def _v04_oracle() -> str:
     "quantized projections, AND-within/OR-across amplification) — the repeated-query "
     "scale path for euclidean metric; fully oracle-checkable because buckets and "
     "distances are exact integer arithmetic in both engines (operators/vectors.py "
-    "ann_topk_e2lsh; the pyspark.ml BucketedRandomProjectionLSH variant remains as "
-    "the library alternative ann_topk_lsh)",
+    "ann_topk_e2lsh)",
 )
 def v04_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serverless_etl_reporting_pipeline_spark.operators.vectors import ann_topk_e2lsh, quantize_np

@@ -12,7 +12,7 @@ event-time string comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 
@@ -41,17 +41,3 @@ def available_now_ingest(
     q.awaitTermination()
     return len(q.recentProgress)
 
-
-def windowed_stream(events: DataFrame, watermark: str = "1 hour"):
-    """Watermarked tumbling-window aggregation over a streaming frame —
-    the streaming twin of plans/streams.py s01 (late rows beyond the
-    watermark are dropped instead of corrupting closed windows)."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("window.start").alias("window_start"), "event_type", "n_events")
-    )

@@ -14,7 +14,7 @@ from serverless_etl_reporting_pipeline_spark.operators.minhash import (
     neardup_components,
 )
 from serverless_etl_reporting_pipeline_spark.operators.multimodal import attach_binary, frame_sample, resize
-from serverless_etl_reporting_pipeline_spark.operators.vectors import ann_topk_lsh, knn_bruteforce, quantize_np
+from serverless_etl_reporting_pipeline_spark.operators.vectors import knn_bruteforce, quantize_np
 from serverless_etl_reporting_pipeline_spark.plans import REGISTRY
 from serverless_etl_reporting_pipeline_spark.sources.reader import load_table
 
@@ -112,18 +112,6 @@ def test_transitive_survivors_collapse_vshapes(spark):
     }
     assert greedy == {1, 2}
     assert trans == {1}
-
-
-def test_ann_lsh_contains_top1(spark, sf_dir):
-    """LSH approx top-10 (euclidean) should include the exact top-1
-    cosine neighbor for normalized-ish random data — sanity recall."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter("vec_id = 0").select("embedding").collect()[0][0]
-    exact = knn_bruteforce(emb.filter("vec_id != 0"), list(quantize_np(q)), k=10).collect()
-    approx = {r["vec_id"] for r in ann_topk_lsh(emb.filter("vec_id != 0"), q, k=10).collect()}
-    assert len(approx) == 10
-    # weak-but-meaningful recall bound: some overlap with exact top-10
-    assert approx & {r["vec_id"] for r in exact}
 
 
 def test_ann_e2lsh_prunes_and_recalls(spark, sf_dir):
@@ -695,10 +683,15 @@ def test_ivf_probe_zero_norm_vectors_excluded(spark):
 
 def test_zero_norm_vectors_never_ranked(spark):
     """r7 verdict ask #1: the pre-r7 kernels (knn_bruteforce, ann_topk_rp,
-    sq8_rerank_topk, batch_knn, ivf_topk, the pair grids and the band-index
-    probe) must follow the ivf_batch_probe valid-mask discipline — a
-    zero-norm corpus vector is excluded from every ranking, a zero-norm
-    query yields no rows, and no NaN ever reaches a comparison."""
+    sq8_rerank_topk, batch_knn, ivf_topk, the pair grids, semdedup_map
+    and the band-index probe) must follow the ivf_batch_probe valid-mask
+    discipline — a zero-norm corpus vector is excluded from every
+    ranking, a zero-norm query yields no rows, and no NaN ever reaches a
+    comparison. An EXTREME-MAGNITUDE row (a |x| > COMPONENT_BOUND
+    component) is corrupt and excluded the same way: before the shared
+    valid mask, sq8's own mask let a [1e30, 0] row take the top int8
+    score (saturated code) with a NULL rerank cosine and crowd a real
+    candidate out of the window."""
     import math
 
     from serverless_etl_reporting_pipeline_spark.operators.vectors import (
@@ -710,10 +703,13 @@ def test_zero_norm_vectors_never_ranked(spark):
         neardup_pairs_lsh_banded,
         neardup_vector_index_probe,
         quantize_np,
+        semdedup_map,
         sq8_rerank_topk,
         top_similar_pairs,
-        top_similar_pairs_broadcast,
     )
+
+    def defined(values):
+        return all(v is not None and not math.isnan(v) for v in values)
 
     schema = "vec_id long, embedding array<float>, label long"
     df = spark.createDataFrame(
@@ -723,48 +719,47 @@ def test_zero_norm_vectors_never_ranked(spark):
             (3, [0.0, 0.0], 0),  # zero-norm: cosine undefined
             (4, [0.0, 1.0], 1),
             (5, [-1.0, 0.0], 1),
+            (9, [1e30, 0.0], 0),  # extreme magnitude: corrupt
         ],
         schema,
     )
+    bad = {3, 9}
     q = list(quantize_np([1.0, 0.0]))
     zq = list(quantize_np([0.0, 0.0]))
 
-    # single-query top-k kernels: zero corpus row absent, zero query empty
+    # single-query top-k kernels: zero/corrupt corpus rows absent, zero query empty
     for fn in (knn_bruteforce, ann_topk_rp):
         rows = fn(df, q, k=5).collect()
-        assert rows and 3 not in [r[0] for r in rows], fn.__name__
-        assert not any(math.isnan(r["cos"]) for r in rows), fn.__name__
+        assert rows and not bad & {r[0] for r in rows}, fn.__name__
+        assert defined(r["cos"] for r in rows), fn.__name__
         assert fn(df, zq, k=5).collect() == [], fn.__name__
     rows = ivf_topk(df, q, k=5, nprobe=2).collect()
-    assert rows and 3 not in [r[0] for r in rows]
-    assert not any(math.isnan(r["cos"]) for r in rows)
+    assert rows and not bad & {r[0] for r in rows}
+    assert defined(r["cos"] for r in rows)
     assert ivf_topk(df, zq, k=5, nprobe=2).collect() == []
     rows = sq8_rerank_topk(df, [1.0, 0.0], k=5, n_candidates=3).collect()
-    # zero row dropped BEFORE the candidate cut: 3 real candidates survive
-    assert [r[0] for r in rows] != [] and 3 not in [r[0] for r in rows]
-    assert len(rows) == 3 and not any(math.isnan(r["cos"]) for r in rows)
+    # zero/corrupt rows dropped BEFORE the candidate cut: 3 real candidates survive
+    assert [r[0] for r in rows] != [] and not bad & {r[0] for r in rows}
+    assert len(rows) == 3 and defined(r["cos"] for r in rows)
     assert sq8_rerank_topk(df, [0.0, 0.0], k=5).collect() == []
 
-    # batched kNN: zero corpus row in no ranking, zero query qid absent
+    # batched kNN: zero/corrupt corpus rows in no ranking, zero query qid absent
     queries = spark.createDataFrame(
         [(100, [1.0, 0.0]), (101, [0.0, 0.0])], "qid long, embedding array<float>"
     )
     rows = batch_knn(df, queries, k=5).collect()
     assert {r["qid"] for r in rows} == {100}
-    assert 3 not in [r["vec_id"] for r in rows]
-    assert not any(math.isnan(r["cos"]) for r in rows)
+    assert not bad & {r["vec_id"] for r in rows}
+    assert defined(r["cos"] for r in rows)
 
-    # all-pairs / banded / probe shapes: the zero row never pairs
-    for fn in (top_similar_pairs, top_similar_pairs_broadcast):
-        pairs = fn(df, k=20).collect()
-        assert len(pairs) == 6 and all(3 not in (r["id_a"], r["id_b"]) for r in pairs), fn.__name__
-        assert not any(math.isnan(r["raw_cos"]) for r in pairs), fn.__name__
+    # all-pairs / banded / cluster / probe shapes: zero/corrupt rows never pair
+    pairs = top_similar_pairs(df, k=20).collect()
+    assert len(pairs) == 6 and all(not bad & {r["id_a"], r["id_b"]} for r in pairs)
+    assert defined(r["raw_cos"] for r in pairs)
 
     # Inf/NaN-COMPONENT rows (the doctored row-900009 class) must be
-    # excluded by BOTH pair variants — an Inf build row has norm = inf,
-    # and without the isfinite mask its pairs score ±inf/NaN and rank
-    # FIRST under the -cos lexsort (the r10 ADVICE find on the
-    # broadcast path's build-side mask)
+    # excluded too — an Inf row has norm = inf, and without the isfinite
+    # mask its pairs score ±inf/NaN and rank FIRST under the -cos lexsort
     df_inf = spark.createDataFrame(
         [
             (1, [1.0, 0.0], 0),
@@ -774,19 +769,23 @@ def test_zero_norm_vectors_never_ranked(spark):
         ],
         schema,
     )
-    for fn in (top_similar_pairs, top_similar_pairs_broadcast):
-        pairs = fn(df_inf, k=20).collect()
-        assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)], fn.__name__
-        assert math.isfinite(pairs[0]["raw_cos"]), fn.__name__
+    pairs = top_similar_pairs(df_inf, k=20).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
+    assert math.isfinite(pairs[0]["raw_cos"])
     dups = neardup_map(df, threshold=0.9).collect()
     assert [(r["dup_id"], r["kept_id"]) for r in dups] == [(2, 1)]
+    assert defined(r["cos"] for r in dups)
+    dups = semdedup_map(df, threshold=0.9).collect()
+    assert [(r["dup_id"], r["kept_id"]) for r in dups] == [(2, 1)]
+    assert defined(r["cos"] for r in dups)
     banded = neardup_pairs_lsh_banded(df, threshold=-1.0).collect()
-    assert banded and all(3 not in (r["id_a"], r["id_b"]) for r in banded)
+    assert banded and all(not bad & {r["id_a"], r["id_b"]} for r in banded)
+    assert defined(r["cos"] for r in banded)
     snap = spark.createDataFrame(
         [(6, [1.0, 0.0], 0), (7, [0.0, 0.0], 0)], schema
     )
     probe = {r["vec_id"]: r for r in neardup_vector_index_probe(df, snap, threshold=0.9).collect()}
-    assert probe[6]["is_dup"] and probe[6]["dup_src"] == 1
+    assert probe[6]["is_dup"] and probe[6]["dup_src"] == 1 and defined([probe[6]["cos"]])
     assert not probe[7]["is_dup"] and probe[7]["dup_src"] is None
     spark.catalog.clearCache()
 
