@@ -65,31 +65,38 @@ class FileWatermarkStore:
 def incremental_extract(df: DataFrame, ts_col: str, store: FileWatermarkStore) -> tuple[DataFrame, "_Commit"]:
     """Filter `df` to rows newer than the stored watermark.
 
-    Returns (new_rows, commit). Call ``commit()`` only after the batch
-    has been durably written — the watermark then advances to the max
-    event time of the batch, so a crash between write and commit means
-    reprocessing (at-least-once), never loss.
+    Returns (new_rows, commit). Call ``commit(batch_max)`` only after
+    the batch has been durably written, with the max ``ts_col`` of the
+    rows written (an Observation on the write yields it without a second
+    pass) — the watermark then advances to it, so a crash between write
+    and commit means reprocessing (at-least-once), never loss.
     """
     wm = store.read()
     # ntz_lit: a naive-datetime literal would be read through the
     # session timezone and shift the watermark boundary by the whole
     # zone offset under a non-UTC session (functions/timelit.py, r11)
     new_rows = df.filter(F.col(ts_col) > ntz_lit(wm)) if wm is not None else df
-    return new_rows, _Commit(new_rows, ts_col, store, wm)
+    return new_rows, _Commit(store, wm)
 
 
 class _Commit:
-    def __init__(self, new_rows: DataFrame, ts_col: str, store: FileWatermarkStore, prev: datetime | None):
-        self._df = new_rows
-        self._ts_col = ts_col
+    """Advance the stored watermark to a written batch's max event time.
+
+    The caller passes the max it observed on the write; ``None`` (an
+    empty batch) leaves the store untouched and returns the stored
+    watermark. A max older than the stored watermark raises
+    ``RuntimeError`` before anything is written — the watermark never
+    moves backwards.
+    """
+
+    def __init__(self, store: FileWatermarkStore, prev: datetime | None):
         self._store = store
         self._prev = prev
 
-    def __call__(self) -> datetime | None:
-        row = self._df.agg(F.max(self._ts_col).alias("wm")).collect()[0]
-        new_wm = row["wm"]
-        if new_wm is None:  # empty batch: watermark unchanged
+    def __call__(self, batch_max: datetime | None) -> datetime | None:
+        if batch_max is None:  # empty batch: watermark unchanged
             return self._prev
-        assert self._prev is None or new_wm >= self._prev, "watermark must be monotonic"
-        self._store.write(new_wm)
-        return new_wm
+        if self._prev is not None and batch_max < self._prev:
+            raise RuntimeError(f"watermark must be monotonic: batch max {batch_max} < stored {self._prev}")
+        self._store.write(batch_max)
+        return batch_max

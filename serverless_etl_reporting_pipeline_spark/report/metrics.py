@@ -30,27 +30,32 @@ def daily_metrics(
 
     Mirrors `calculate_metrics` (generate_report.py:70-157): overall
     totals, per-group revenue with best/worst, per-method split with the
-    2% card fee, all from two small aggregation jobs.
+    2% card fee, all from ONE grouping-sets aggregation job — the three
+    groupings ride one scan and one shuffle, and the few result rows are
+    split and ordered on the driver. An empty input yields no grouping
+    rows at all, not even the overall one: that is the empty guard
+    (generate_report.py:72-84), with no separate probe.
     """
-    if transactions.isEmpty():  # generate_report.py:72-84 empty guard
-        return {"empty": True, "total_transactions": 0, "total_revenue": 0.0}
-
-    overall = transactions.agg(
-        F.count("*").alias("n"),
-        F.sum(cents(amount_col)).alias("rev_cents"),
-    ).collect()[0]
-
-    by_group = (
-        transactions.groupBy(group_col)
-        .agg(F.count("*").alias("n"), F.sum(cents(amount_col)).alias("rev_cents"))
-        .orderBy(F.desc("rev_cents"), F.asc(group_col))
+    # grouping_id() over (group, method): 3 = overall, 1 = per group, 2 = per method
+    rows = (
+        transactions.groupingSets([[], [group_col], [method_col]], group_col, method_col)
+        .agg(
+            F.grouping_id().alias("gid"),
+            F.count("*").alias("n"),
+            F.sum(cents(amount_col)).alias("rev_cents"),
+        )
         .collect()
     )
-
-    by_method = (
-        transactions.groupBy(method_col)
-        .agg(F.count("*").alias("n"), F.sum(cents(amount_col)).alias("rev_cents"))
-        .collect()
+    overall = next((r for r in rows if r["gid"] == 3), None)
+    if overall is None:
+        return {"empty": True, "total_transactions": 0, "total_revenue": 0.0}
+    # ORDER BY rev_cents DESC (NULLS LAST), group ASC (NULLS FIRST)
+    by_group = sorted(
+        (r for r in rows if r["gid"] == 1),
+        key=lambda r: (r["rev_cents"] is None, -(r["rev_cents"] or 0), r[group_col] is not None, r[group_col]),
+    )
+    by_method = sorted(
+        (r for r in rows if r["gid"] == 2), key=lambda r: (r[method_col] is not None, r[method_col])
     )
 
     total_cents = overall["rev_cents"]

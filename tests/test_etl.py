@@ -163,7 +163,62 @@ def test_incremental_extract_empty_batch(spark, tmp_path):
     df = clean_transactions(_raw(spark, [_row(1)]))
     inc, commit = incremental_extract(df, "at", store)
     assert inc.isEmpty()
-    assert commit() == datetime(2030, 1, 1)  # unchanged on empty batch
+    assert commit(None) == datetime(2030, 1, 1)  # unchanged on empty batch (no observed max)
+
+
+def _lake_files(lake):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), lake) for d, _, fs in os.walk(lake) for f in fs if f.endswith(".parquet")
+    )
+
+
+def test_pipeline_commit_is_one_write(spark, raw_df, tmp_path, spark_jobs):
+    """A non-empty commit is the lake write alone (its shuffle-map and
+    result jobs): row count and new watermark come from the write's
+    Observation, with no probe, count or watermark aggregate beside it."""
+    result, jobs = spark_jobs(lambda: run_pipeline(raw_df, str(tmp_path / "lake"), str(tmp_path / "wm.txt")))
+    assert result.rows_written == 4
+    assert jobs <= 2, f"{jobs} Spark jobs for one commit"
+
+
+def test_pipeline_empty_increment_writes_nothing(spark, raw_df, tmp_path):
+    lake = str(tmp_path / "lake")
+    state = tmp_path / "wm.txt"
+    first = run_pipeline(raw_df, lake, str(state))
+    files, stored = _lake_files(lake), state.read_bytes()
+    again = run_pipeline(raw_df, lake, str(state))
+    assert (again.rows_written, again.watermark) == (0, first.watermark)
+    assert _lake_files(lake) == files
+    assert state.read_bytes() == stored
+    # a fresh lake path: a zero-row write leaves only the _SUCCESS marker
+    fresh = str(tmp_path / "fresh")
+    none = run_pipeline(_raw(spark, []), fresh, str(tmp_path / "wm_fresh.txt"))
+    assert (none.rows_written, none.watermark) == (0, None)
+    assert [f for f in os.listdir(fresh) if not f.startswith(".")] == ["_SUCCESS"]  # no data, no partition dir
+    assert not (tmp_path / "wm_fresh.txt").exists()
+
+
+def test_pipeline_write_dims_commits_batch_max(spark, raw_df, tmp_path):
+    from datetime import datetime
+
+    state = str(tmp_path / "wm.txt")
+    result = run_pipeline(raw_df, str(tmp_path / "lake"), state, write_dims=True)
+    assert result.watermark == datetime(2024, 4, 5, 20, 0, 0)  # latest surviving row (id 8)
+    assert FileWatermarkStore(state).read() == result.watermark
+
+
+def test_commit_refuses_watermark_regression(spark, tmp_path):
+    """An explicit check, not an assert: it must hold under python -O."""
+    from datetime import datetime
+
+    path = tmp_path / "wm.txt"
+    store = FileWatermarkStore(str(path))
+    store.write(datetime(2030, 1, 1))
+    stored = path.read_bytes()
+    _, commit = incremental_extract(clean_transactions(_raw(spark, [_row(1)])), "at", store)
+    with pytest.raises(RuntimeError, match="monotonic"):
+        commit(datetime(2024, 3, 1, 10, 0, 0))
+    assert path.read_bytes() == stored
 
 
 def test_compact_partitions_one_file_each(spark, sf_dir, tmp_path):

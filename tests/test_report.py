@@ -33,6 +33,47 @@ def test_metrics_empty(spark):
     assert m["empty"] is True
 
 
+def test_metrics_one_aggregate(spark, spark_jobs, tmp_path):
+    """Overall, per-group and per-method totals over a lake day come from
+    one grouping-sets aggregate: no empty probe, one shuffle."""
+    _transactions(spark).write.parquet(str(tmp_path / "day"))
+    tx = spark.read.parquet(str(tmp_path / "day"))
+    m, jobs = spark_jobs(lambda: daily_metrics(tx))
+    assert m["total_transactions"] == 3
+    assert jobs <= 2, f"{jobs} Spark jobs for one report"
+
+
+def test_metrics_match_separate_aggregates(spark):
+    """The grouping-sets split reproduces three plain aggregates exactly:
+    groups ordered by revenue desc then name asc, a NULL name first among
+    equal revenue, methods keyed by name (NULL included)."""
+    from pyspark.sql import functions as F
+
+    from serverless_etl_reporting_pipeline_spark.functions.money import cents
+
+    rows = [
+        (1, "2024-03-01 10:00:00", 1000, 1, 1, "Truck A", "d", 1, 5, "card"),
+        (2, "2024-03-01 11:00:00", 1000, 2, 2, None, "d", 0, 3, "cash"),
+        (3, "2024-03-01 12:00:00", 1000, 3, 3, "Truck C", "d", 1, 4, None),
+        (4, "2024-03-01 13:00:00", 2500, 4, 1, "Truck D", "d", 1, 4, "card"),
+        (5, "2024-03-01 14:00:00", 999, 5, 2, "Truck B", "d", 1, 4, "cash"),
+    ]
+    tx = clean_transactions(spark.createDataFrame(rows, schema=RAW_TRANSACTIONS_SCHEMA))
+    m = daily_metrics(tx)
+
+    def agg(key):
+        return tx.groupBy(key).agg(F.count("*").alias("n"), F.sum(cents("total")).alias("c"))
+
+    groups = agg("truck_name").orderBy(F.desc("c"), F.asc("truck_name")).collect()
+    assert m["by_group"] == [{"name": r["truck_name"], "transactions": r["n"], "revenue": r["c"] / 100.0} for r in groups]
+    assert [g["name"] for g in m["by_group"]] == ["Truck D", None, "Truck A", "Truck C", "Truck B"]
+    assert (m["best_group"], m["worst_group"]) == ("Truck D", "Truck B")
+    methods = {r["payment_method"]: (r["n"], r["c"] / 100.0) for r in agg("payment_method").collect()}
+    assert {k: (v["transactions"], v["revenue"]) for k, v in m["by_method"].items()} == methods
+    assert m["total_transactions"] == 5 and m["total_revenue"] == 64.99
+    assert m["card_fees"] == 0.70  # 2% of 35.00 card revenue
+
+
 def test_html_render(spark):
     html = render_html(daily_metrics(_transactions(spark)), title="T3 Daily")
     assert "T3 Daily" in html and "Truck A" in html and "49.20" in html
